@@ -19,7 +19,7 @@ from __future__ import annotations
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from logdata_anomaly_miner_spark.constraints.drift import histogram, psi_kl
@@ -29,6 +29,7 @@ from logdata_anomaly_miner_spark.constraints.uniqueness import duplicate_keys_sa
 # into the merged single-scan branch below, predicate-for-predicate — the
 # standalone functions remain the unit-tested reference implementations.
 from logdata_anomaly_miner_spark.datagen import KINDS
+from logdata_anomaly_miner_spark.frames import from_driver
 from logdata_anomaly_miner_spark.operators.entropy import (
     check_entropy,
     learn_bigram_freq,
@@ -63,6 +64,26 @@ class SuiteResult:
     metrics: dict = field(default_factory=dict)
 
 
+NO_TS_PARTITION = "__no_ts__"
+
+
+def day_partition() -> Column:
+    """The partition key of a document: the UTC day of its event time.
+
+    Pure arithmetic — from_unixtime would use the SESSION time zone, making
+    checkpoint partition keys differ between clusters configured
+    differently. A null/uncastable ts gets the ``__no_ts__`` sentinel so
+    its documents are still validated and its violations still join the
+    per-partition verdicts."""
+    return F.coalesce(
+        F.date_add(
+            F.lit("1970-01-01").cast("date"),
+            F.floor(F.col("ts").cast("double") / 86400.0).cast("int"),
+        ).cast("string"),
+        F.lit(NO_TS_PARTITION),
+    )
+
+
 def _viol(df: DataFrame, suite: str, message: str) -> DataFrame:
     """Project any check output onto the unified violation schema."""
     cols = df.columns
@@ -84,6 +105,7 @@ def run_suite(
     media: DataFrame,
     config: SuiteConfig | None = None,
     persist: bool = True,
+    violations_path: str | None = None,
 ) -> SuiteResult:
     """Run all constraint suites; returns violations, per-partition verdicts,
     and job metrics.
@@ -92,24 +114,22 @@ def run_suite(
     expensive upstream computation). For parquet/Iceberg-backed input pass
     ``persist=False``: re-scanning with column pruning is cheaper than the
     cache build — caching is memory-bandwidth-bound and doesn't scale with
-    cores, while pruned columnar scans do."""
+    cores, while pruned columnar scans do.
+
+    ``violations_path``: when given, the violations are written there as
+    parquet (mode overwrite) before this returns. Cache lifecycle: the
+    violations union is cached for the duration of the call only. The
+    verdict collect computes it once into the cache; the write (if any)
+    reads that cache, a single job with no recomputation; then every block
+    this call cached is released. Nothing stays cached after the return,
+    whether or not a path was given. The returned ``verdicts`` are built
+    from the collected rows; the returned ``violations`` is the lazy plan,
+    so reading it again recomputes the checks — pass ``violations_path``
+    rather than writing ``result.violations`` afterwards."""
     cfg = config or SuiteConfig()
     t_start = time.time()
 
-    # UTC day bucket by pure arithmetic — from_unixtime would use the
-    # SESSION time zone, making checkpoint partition keys differ between
-    # clusters configured differently; null/uncastable ts gets a sentinel
-    # partition so its violations still join the per-partition verdicts
-    docs = documents.withColumn(
-        "partition",
-        F.coalesce(
-            F.date_add(
-                F.lit("1970-01-01").cast("date"),
-                F.floor(F.col("ts").cast("double") / 86400.0).cast("int"),
-            ).cast("string"),
-            F.lit("__no_ts__"),
-        ),
-    )
+    docs = documents.withColumn("partition", day_partition())
     if persist:
         docs = docs.persist()
     # partition rides along through posexplode — no join needed (a join here
@@ -325,19 +345,14 @@ def run_suite(
         .withColumn("pass", F.col("n_violations") == 0)
     )
     vrows = verdicts.collect()
-    violations.unpersist()  # verdicts re-materialize from the collected rows
-    if vrows:
-        # Arrow ingestion (pandas) instead of a pickled-row local relation:
-        # the row path spreads the handful of verdict rows over
-        # defaultParallelism slices, and every downstream action then pays
-        # one Python-worker round-trip per slice (measured ~5 s per force
-        # on local[32]; the Arrow path is ~0.2 s — guide §4.1).
-        import pandas as pd
-
-        verdicts = spark.createDataFrame(
-            pd.DataFrame([r.asDict() for r in vrows], columns=verdicts.schema.names),
-            schema=verdicts.schema,
-        )
+    # between the collect that filled the violations cache and its release:
+    # the write is one job over the cache, not a second evaluation
+    if violations_path is not None:
+        violations.write.mode("overwrite").parquet(violations_path)
+    violations.unpersist()
+    # the verdicts re-enter Spark from the collected rows (Arrow, no Python
+    # worker), so reading them never recomputes the checks
+    verdicts = from_driver(spark, vrows, verdicts.schema)
     parts = {}
     n_viol = 0
     for r in vrows:
@@ -354,8 +369,9 @@ def run_suite(
         "docs_per_sec": round(n_docs / wall, 1) if wall > 0 else None,
     }
     # texts was persisted unconditionally above; the verdict collect is the
-    # last action that reads it — release it here so repeated run_suite
-    # calls in one session don't accumulate cached blocks
+    # last action that evaluates it (the write reads the violations cache) —
+    # release it here so repeated run_suite calls in one session don't
+    # accumulate cached blocks
     texts.unpersist()
     if persist:
         flat.unpersist()

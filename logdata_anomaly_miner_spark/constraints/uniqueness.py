@@ -16,22 +16,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def duplicate_keys(df: DataFrame, key_cols: Sequence[str]) -> DataFrame:
-    """Plain hash-aggregate: keys occurring more than once + their count.
-    Map-side partial aggregation makes the shuffle |distinct keys| rows."""
-    return (
-        df.groupBy(*key_cols)
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .filter(F.col("cnt") > 1)
-    )
-
-
 def duplicate_keys_salted(
     df: DataFrame, key_cols: Sequence[str], salt_buckets: int = 64
 ) -> DataFrame:
     """Two-phase salted aggregate: groupBy(key, salt) partial counts,
-    then groupBy(key) final sum. Identical result, bounded per-reducer
-    fan-in for arbitrarily hot keys."""
+    then groupBy(key) final sum. Same result as a plain groupBy, bounded
+    per-reducer fan-in for arbitrarily hot keys."""
     salt = F.pmod(F.hash(F.monotonically_increasing_id()), F.lit(salt_buckets))
     partial = (
         df.withColumn("_salt", salt)

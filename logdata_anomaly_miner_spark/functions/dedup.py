@@ -410,14 +410,6 @@ def portable_simhash_bits(
     )
 
 
-def all_pairs(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Exact candidate set: every (id_a < id_b) pair — the small-input /
-    oracle path; use lsh_candidate_pairs at scale."""
-    a = df.select(F.col(id_col).alias("id_a"))
-    b = df.select(F.col(id_col).alias("id_b"))
-    return a.crossJoin(b).filter(F.col("id_a") < F.col("id_b"))
-
-
 def hamming64(a: Column, b: Column) -> Column:
     return F.bit_count(a.bitwiseXOR(b))
 

@@ -17,6 +17,20 @@ from pyspark.sql import functions as F
 
 VIOLATION_COLS = ["detector", "message", "ts", "group_key", "value", "detail"]
 
+# The degenerate band. On an exact fit sigma is float noise (5e-15 on a
+# series of scale 1e2), and so are the residuals, so comparing the two
+# alarms on a clean series. Every |deviation| > k·sigma band floors the
+# sigma it compares against at SIGMA_REL_FLOOR times the series scale: a
+# deviation below that is float noise, never an anomaly. Reported sigma
+# columns stay the fitted value.
+SIGMA_REL_FLOOR = 1e-9
+
+
+def band_sigma(sigma: Column, scale: Column) -> Column:
+    """The sigma a band compares against: ``sigma`` floored at
+    SIGMA_REL_FLOOR · |scale|."""
+    return F.greatest(sigma, F.lit(SIGMA_REL_FLOOR) * F.abs(scale))
+
 
 def violation_cols(
     detector: str,

@@ -22,6 +22,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from logdata_anomaly_miner_spark.operators.base import band_sigma
+
 
 def linear_histogram(
     df: DataFrame,
@@ -79,7 +81,9 @@ def average_change(
 ) -> DataFrame:
     """Per-bin mean vs trailing history mean, normalized by history stddev
     (population, matching numpy defaults elsewhere): flags bins where
-    |mean - hist_mean| > change_threshold * hist_std.
+    |mean - hist_mean| > change_threshold * hist_std, with hist_std floored
+    at a scale-relative epsilon (operators.base.band_sigma) so a constant
+    history never alarms on float noise.
 
     Returns one row per (group, bin) with mean/hist_mean/hist_std/changed.
     """
@@ -108,6 +112,7 @@ def average_change(
         (F.col("n_hist") >= 2)
         & (
             F.abs(F.col("mean") - F.col("hist_mean"))
-            > F.lit(change_threshold) * F.col("hist_std")
+            > F.lit(change_threshold)
+            * band_sigma(F.col("hist_std"), F.col("hist_mean"))
         ),
     )

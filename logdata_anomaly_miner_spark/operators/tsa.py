@@ -30,6 +30,13 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from logdata_anomaly_miner_spark.operators.base import SIGMA_REL_FLOOR, band_sigma
+
+
+def _band_sigma_np(sigma: float, lvl: np.ndarray) -> float:
+    """band_sigma for the pandas fits; the scale is the key's max |count|."""
+    return max(sigma, SIGMA_REL_FLOOR * float(np.max(np.abs(lvl))))
+
 
 def ar1_forecast_bands(
     counts: DataFrame,
@@ -98,13 +105,19 @@ def ar1_forecast_bands(
     sig = (
         scored.filter(F.col("_x").isNotNull())
         .groupBy(*key_cols)
-        .agg(F.stddev_pop(lvl - F.col("pred")).alias("sigma"))
+        .agg(
+            F.stddev_pop(lvl - F.col("pred")).alias("sigma"),
+            F.max(F.abs(lvl)).alias("_scale"),
+        )
     )
     out = scored.join(F.broadcast(sig), list(key_cols)).withColumn(
         "anomaly",
         F.col("pred").isNotNull()
         & (F.col("n_train") >= min_train)
-        & (F.abs(lvl - F.col("pred")) > F.lit(float(z)) * F.col("sigma")),
+        & (
+            F.abs(lvl - F.col("pred"))
+            > F.lit(float(z)) * band_sigma(F.col("sigma"), F.col("_scale"))
+        ),
     )
     return out.select(
         *key_cols,
@@ -218,13 +231,19 @@ def hr_arma_forecast_bands(
     sig = (
         scored.filter(F.col("pred").isNotNull())
         .groupBy(*key_cols)
-        .agg(F.stddev_pop(F.col("_y") - F.col("pred")).alias("sigma"))
+        .agg(
+            F.stddev_pop(F.col("_y") - F.col("pred")).alias("sigma"),
+            F.max(F.abs("_y")).alias("_scale"),
+        )
     )
     out = scored.join(F.broadcast(sig), list(key_cols)).withColumn(
         "anomaly",
         F.col("pred").isNotNull()
         & (F.col("n_train") >= min_train)
-        & (F.abs(F.col("_y") - F.col("pred")) > F.lit(float(z)) * F.col("sigma")),
+        & (
+            F.abs(F.col("_y") - F.col("pred"))
+            > F.lit(float(z)) * band_sigma(F.col("sigma"), F.col("_scale"))
+        ),
     )
     return out.select(*key_cols, w_col, cnt_col, "pred", "sigma", "n_train", "anomaly")
 
@@ -478,7 +497,7 @@ def arma_forecast_bands(
         resid = lvl[~np.isnan(preds)] - preds[~np.isnan(preds)]
         sigma = float(np.sqrt(np.mean(resid**2))) if resid.size else float("nan")
         anom = (
-            (np.abs(lvl - preds) > z * sigma) & ~np.isnan(preds)
+            (np.abs(lvl - preds) > z * _band_sigma_np(sigma, lvl)) & ~np.isnan(preds)
             if resid.size
             else np.zeros(n, dtype=bool)
         )
@@ -530,7 +549,7 @@ def ar_forecast_bands(
         resid = target - preds[p:] if n > p + min_train else np.array([])
         sigma = float(np.sqrt(np.mean(resid**2))) if resid.size else float("nan")
         anom = (
-            np.abs(yv - preds) > z * sigma
+            np.abs(yv - preds) > z * _band_sigma_np(sigma, yv)
             if resid.size
             else np.zeros(n, dtype=bool)
         )

@@ -17,6 +17,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from logdata_anomaly_miner_spark.frames import from_driver
+
 MANIFEST_SCHEMA = (
     "snapshot_id long, partition string, status string, "
     "rows_scanned long, violations long, wall_time_s double"
@@ -35,7 +37,7 @@ class CheckpointManifest:
 
     def read(self) -> DataFrame:
         if not self._exists():
-            return self.spark.createDataFrame([], MANIFEST_SCHEMA)
+            return from_driver(self.spark, [], MANIFEST_SCHEMA)
         return self.spark.read.schema(MANIFEST_SCHEMA).parquet(self.path)
 
     def committed_partitions(self, snapshot_id: int) -> set[str]:
@@ -57,19 +59,15 @@ class CheckpointManifest:
         violations: int,
         wall_time_s: float,
     ) -> None:
-        row = [
-            (
-                int(snapshot_id),
-                str(partition),
-                "done",
-                int(rows_scanned),
-                int(violations),
-                float(wall_time_s),
-            )
-        ]
-        (
-            self.spark.createDataFrame(row, MANIFEST_SCHEMA)
-            .coalesce(1)
-            .write.mode("append")
-            .parquet(self.path)
+        row = (
+            int(snapshot_id),
+            str(partition),
+            "done",
+            int(rows_scanned),
+            int(violations),
+            float(wall_time_s),
+        )
+        # one Arrow batch -> one partition -> one file per commit
+        from_driver(self.spark, [row], MANIFEST_SCHEMA).write.mode("append").parquet(
+            self.path
         )

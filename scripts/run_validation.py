@@ -36,7 +36,7 @@ def main() -> int:
     from pyspark.sql import functions as F
 
     from logdata_anomaly_miner_spark.config import load_spec, to_suite_config
-    from logdata_anomaly_miner_spark.constraints.suite import run_suite
+    from logdata_anomaly_miner_spark.constraints.suite import day_partition, run_suite
     from logdata_anomaly_miner_spark.plans.checkpoint import CheckpointManifest
     from logdata_anomaly_miner_spark.session import get_spark
 
@@ -48,9 +48,9 @@ def main() -> int:
     media = spark.read.parquet(args.media)
     manifest = CheckpointManifest(spark, f"{args.out}/manifest")
 
-    docs = docs.withColumn(
-        "partition", F.from_unixtime(F.col("ts").cast("long"), "yyyy-MM-dd")
-    )
+    # the suite's own UTC day key: independent of the session time zone,
+    # and null-ts docs land in the __no_ts__ partition instead of a None key
+    docs = docs.withColumn("partition", day_partition())
     partitions = sorted(
         r["partition"] for r in docs.select("partition").distinct().collect()
     )
@@ -61,10 +61,9 @@ def main() -> int:
     for part in todo:
         t0 = time.time()
         part_docs = docs.filter(F.col("partition") == part).drop("partition")
-        res = run_suite(spark, part_docs, media, cfg)
-        (
-            res.violations.write.mode("overwrite")
-            .parquet(f"{args.out}/violations/partition={part}")
+        res = run_suite(
+            spark, part_docs, media, cfg,
+            violations_path=f"{args.out}/violations/partition={part}",
         )
         manifest.commit(
             args.snapshot_id,

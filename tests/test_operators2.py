@@ -67,6 +67,18 @@ def test_average_change(spark):
     assert changed[2] is False and changed[3] is False
 
 
+def test_average_change_constant_history_is_not_a_change(spark):
+    """Every bin has mean 0.1 (three values of 0.1 each). In floats the bin
+    mean is 0.10000000000000002 and the mean over 7+ history bins is 0.1,
+    while the history stddev is exactly 0: the band floors hist_std at a
+    scale-relative epsilon, so this float noise is not a change."""
+    rows = [(T0 + b * 10 + k, 0.1) for b in range(12) for k in (1, 2, 3)]
+    df = spark.createDataFrame(rows, "ts double, v double")
+    out = average_change(df, "v", "ts", 10.0, change_threshold=2.0).collect()
+    assert len(out) == 12
+    assert not any(r["changed"] for r in out)
+
+
 def test_unsorted_and_adjust(spark):
     rows = [(1, T0 + 10.0), (2, T0 + 20.0), (3, T0 + 15.0), (4, T0 + 30.0)]
     df = spark.createDataFrame(rows, "event_id long, ts double")

@@ -193,3 +193,28 @@ def test_arma_seasonal_diff_combination(spark):
         _series(spark, clean_vals), ["k"], p=1, q=0, d=1, seasonal_lag=6, min_train=10
     ).collect()}
     assert not any(r["anomaly"] for r in clean.values())
+
+
+def test_exact_fits_never_alarm_on_float_noise(spark):
+    """The degenerate band: every band operator floors the sigma it
+    compares against at a scale-relative epsilon, so an exactly-fitting
+    series (sigma and residuals both float noise) raises no alarm. The
+    spikes the other tests plant on such series still flag."""
+    from logdata_anomaly_miner_spark.operators.tsa import arma_forecast_bands
+
+    cyc = [0.0, 8.0, 3.0, -2.0, 5.0, 1.0]
+    clean = [0.5 * t + cyc[t % 6] + 60.0 for t in range(120)]  # y_t = y_{t-6} + 3
+    trend = [60.0 + 0.1 * t for t in range(120)]  # constant first difference
+    runs = {
+        "ar1_d1": lambda v: ar1_forecast_bands(_series(spark, v), ["k"], diff=1),
+        "hr_seasonal": lambda v: hr_arma_forecast_bands(
+            _series(spark, v), ["k"], mode="seasonal", seasonal_lag=6),
+        "ar6": lambda v: ar_forecast_bands(_series(spark, v), ["k"], p=6, min_train=10),
+        "arma_d1_seasonal": lambda v: arma_forecast_bands(
+            _series(spark, v), ["k"], p=1, q=0, d=1, seasonal_lag=6, min_train=10),
+    }
+    for name, run in runs.items():
+        series = trend if name == "ar1_d1" else clean
+        rows = run(series).collect()
+        assert not any(r["anomaly"] for r in rows), name
+        assert all(r["sigma"] < 1e-6 for r in rows if r["sigma"] is not None), name
