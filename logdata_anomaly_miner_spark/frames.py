@@ -6,6 +6,10 @@ slice. ``from_driver`` instead builds an Arrow table with the Arrow types
 of the Spark schema and hands it to the JVM directly — no Python worker,
 and nullable integer columns stay integers (a pandas frame built without
 explicit dtypes would turn them into float64 with NaN).
+
+The rows are still sliced across partitions (2 rows may land in 2
+partitions), so a caller that writes the result as one file keeps its
+``coalesce(1)``.
 """
 
 from __future__ import annotations

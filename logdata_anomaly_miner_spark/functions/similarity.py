@@ -7,8 +7,6 @@
   bucket the vectors; candidates share the query's bucket (multi-probe via
   hamming-1 neighbors optional), then exact cosine re-ranks candidates.
   At 10^12 vectors the bucket join replaces the full scan.
-- ``embedding_near_dup_pairs``: pairwise near-duplicate detection within
-  LSH buckets (cosine ≥ threshold).
 """
 
 from __future__ import annotations
@@ -17,6 +15,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from logdata_anomaly_miner_spark.frames import from_driver
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -253,18 +253,9 @@ def ivf_topk(
         # Written through Spark (it is only n_centroids rows, one tiny
         # job) so hdfs:// / s3a:// destinations work identically to
         # local paths — pyarrow would silently write driver-local.
-        # Arrow ingestion (pandas) instead of a pickled-row local
-        # relation: the row path fans the 8 rows over defaultParallelism
-        # slices, each costing a Python-worker round-trip (measured ~5 s
-        # per write on local[32]; Arrow path ~0.2 s — guide §4.1).
-        import pandas as pd
-
-        spark.createDataFrame(
-            pd.DataFrame(
-                {"cell": list(range(len(centers))), "c": centers}
-            ),
-            schema="cell int, c array<double>",
-        ).coalesce(1).write.mode("overwrite").parquet(codebook_out_path)
+        cells = [(i, list(c)) for i, c in enumerate(centers)]
+        codebook = from_driver(spark, cells, "cell int, c array<double>")
+        codebook.coalesce(1).write.mode("overwrite").parquet(codebook_out_path)
     q = np.array(query, dtype=np.float64)
     scores = [
         float(np.dot(q, np.array(c)) - 0.5 * float(np.dot(np.array(c), np.array(c))))
@@ -295,8 +286,7 @@ def exact_near_dup_pairs(
        candidate pairs above (threshold − slack). Peak task memory is
        2·(n/B)·d·8 bytes + a rows_per_chunk-bounded sims tile — tune
        n_blocks so a block fits an executor. Exact all-pairs is O(n²)
-       FLOPs by definition; this spreads them over B(B+1)/2 tasks (the
-       sub-quadratic scale path is ``embedding_near_dup_pairs``).
+       FLOPs by definition; this spreads them over B(B+1)/2 tasks.
     2. **Exact re-check**: candidates (broadcast — they are few) join their
        vectors back and the cosine is recomputed with the same sequential
        zip_with/aggregate expression the SQL oracle uses, so reported
@@ -374,37 +364,4 @@ def exact_near_dup_pairs(
         pairs.withColumn("cosine", F.round(sim, 9))
         .filter(F.col("cosine") >= threshold)
         .select("id_a", "id_b", "cosine")
-    )
-
-
-def embedding_near_dup_pairs(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    threshold: float = 0.9,
-    n_planes: int = 8,
-    seed: int = 42,
-    dim: int | None = None,
-) -> DataFrame:
-    """Near-duplicate embedding pairs: LSH-bucket self-join + exact cosine.
-    Exact within a bucket; pairs split across buckets are missed (standard
-    LSH recall tradeoff, mitigated by fewer planes / multiple tables)."""
-    if dim is None:
-        row = df.select(vec_col).first()
-        if row is None:  # empty input -> empty pairs, not TypeError
-            return df.sparkSession.createDataFrame(
-                [], "id_a long, id_b long, cosine double"
-            )
-        dim = len(row[0])
-    planes = make_planes(dim, n_planes, seed)
-    sig = df.withColumn("_sig", hyperplane_signature(F.col(vec_col), planes))
-    a = sig.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"), "_sig")
-    b = sig.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"), "_sig")
-    pairs = a.join(b, "_sig").filter(F.col("id_a") < F.col("id_b"))
-    sim = _cosine(F.col("va"), F.col("vb"))
-    return (
-        pairs.withColumn("cosine", F.round(sim, 9))
-        .filter(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", "cosine")
-        .dropDuplicates(["id_a", "id_b"])
     )

@@ -23,6 +23,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 
+from logdata_anomaly_miner_spark.frames import from_driver
+
 
 def allowlist_values(
     baseline: DataFrame, values: Sequence[tuple], value_cols: Sequence[str]
@@ -31,11 +33,9 @@ def allowlist_values(
     the values stop alarming on the next run and are never re-reported."""
     if not values:
         return baseline
-    spark = baseline.sparkSession
-    add = spark.createDataFrame(
-        [tuple(v) for v in values], schema=baseline.select(*value_cols).schema
-    )
-    return baseline.select(*value_cols).unionByName(add).dropDuplicates()
+    base = baseline.select(*value_cols)
+    add = from_driver(baseline.sparkSession, values, base.schema)
+    return base.unionByName(add).dropDuplicates()
 
 
 def blocklist_values(
@@ -46,11 +46,9 @@ def blocklist_values(
     as novel on the next run."""
     if not values:
         return baseline
-    spark = baseline.sparkSession
-    drop = spark.createDataFrame(
-        [tuple(v) for v in values], schema=baseline.select(*value_cols).schema
-    )
-    return baseline.select(*value_cols).join(drop, list(value_cols), "left_anti")
+    base = baseline.select(*value_cols)
+    drop = from_driver(baseline.sparkSession, values, base.schema)
+    return base.join(drop, list(value_cols), "left_anti")
 
 
 def allowlist_path(
@@ -124,7 +122,7 @@ def save_path_lists(
     rows = [("constraint", c) for c in constraint_cols] + [
         ("ignore", c) for c in ignore_cols
     ]
-    df = spark.createDataFrame(rows or [], "list_type string, col string")
+    df = from_driver(spark, rows, "list_type string, col string")
     df.coalesce(1).write.mode("overwrite").parquet(table_path)
 
 

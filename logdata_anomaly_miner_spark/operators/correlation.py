@@ -22,6 +22,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from logdata_anomaly_miner_spark.frames import from_driver
+
 
 def contingency(df: DataFrame, col_a: str, col_b: str) -> DataFrame:
     """(a, b, cnt) contingency table."""
@@ -86,7 +88,8 @@ def chi_square_pairs(
     statistic matches the per-pair form (and the oracle) to rounding."""
     pair_list = [(a, b) for i, a in enumerate(cols) for b in cols[i + 1 :]]
     if not pair_list:  # fewer than two columns: empty result, not IndexError
-        return df.sparkSession.createDataFrame(
+        return from_driver(
+            df.sparkSession,
             [],
             "col_a string, col_b string, chi2 double, dof long, "
             "z double, dependent boolean",
@@ -276,9 +279,8 @@ def preselect_pairs(
             if acc < num_init:
                 carry_rows.append((var, pid, acc))
             acc += n
-    spark = df.sparkSession
-    carry_df = spark.createDataFrame(
-        carry_rows, schema="_var string, _pid int, _carry long"
+    carry_df = from_driver(
+        df.sparkSession, carry_rows, "_var string, _pid int, _carry long"
     )
     w = Window.partitionBy("_var", "_pid").orderBy(*[F.col(c) for c in order_cols])
     melted = (

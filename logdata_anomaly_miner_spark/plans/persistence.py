@@ -26,6 +26,8 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
+from logdata_anomaly_miner_spark.frames import from_driver
+
 
 def _enc_key(v) -> str:
     if isinstance(v, str):
@@ -77,7 +79,7 @@ def ranges_from_reference_json(
     for k, mn in mins.items():
         key = "\x1f".join(k) if isinstance(k, tuple) else str(k)
         rows.append((key, float(mn), float(maxs[k])))
-    return spark.createDataFrame(rows, f"{id_col} string, min double, max double")
+    return from_driver(spark, rows, f"{id_col} string, min double, max double")
 
 
 def known_values_to_reference_json(values: DataFrame, value_col: str = "value") -> str:
@@ -93,7 +95,7 @@ def known_values_from_reference_json(
 ) -> DataFrame:
     vals = [[_dec_key(v).decode() if isinstance(_dec_key(v), bytes) else _dec_key(v)]
             for v in json.loads(payload)]
-    return spark.createDataFrame(vals, f"{value_col} string")
+    return from_driver(spark, vals, f"{value_col} string")
 
 
 def atomic_write(path: str, payload: str) -> None:

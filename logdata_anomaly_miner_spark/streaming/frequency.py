@@ -22,6 +22,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from logdata_anomaly_miner_spark.frames import from_driver
+
 
 def _hadoop_dir_has_files(spark, path: str) -> bool:
     """True iff `path` exists and holds at least one file, resolved through
@@ -203,7 +205,7 @@ def streaming_entropy_check(
         merged, _ = learn_bigram_freq(batch_df, value_col, baseline=freq)
         # materialize BEFORE overwrite: the new table derives from the old
         rows = merged.collect()
-        spark.createDataFrame(rows, merged.schema).write.mode("overwrite").parquet(
+        from_driver(spark, rows, merged.schema).write.mode("overwrite").parquet(
             freq_dir
         )
 

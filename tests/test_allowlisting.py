@@ -32,6 +32,18 @@ def test_blocklist_value_alarms_again(spark):
     assert check_new_values(batch, ["event_type"], base2).count() == 1
 
 
+def test_value_tuples_with_null_keep_the_baseline_types(spark):
+    base = spark.createDataFrame([("login", 1), ("probe", None)], "event_type string, port int")
+    added = allowlist_values(base, [("scan", None), ("login", 1)], ["event_type", "port"])
+    assert added.schema == base.schema
+    assert sorted(added.collect(), key=lambda r: r["event_type"]) == [
+        ("login", 1), ("probe", None), ("scan", None)
+    ]
+    dropped = blocklist_values(base, [("login", 1), ("scan", None)], ["event_type", "port"])
+    assert dropped.schema == base.schema
+    assert dropped.collect() == [("probe", None)]
+
+
 def test_path_list_mutations():
     cols, msg = allowlist_path((), "user", detector="EntropyDetector")
     assert cols == ("user",)

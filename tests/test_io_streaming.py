@@ -462,6 +462,7 @@ def test_streaming_entropy_check_then_learn(spark):
             .start()
         )
         q.awaitTermination(120)
+        first_schema = spark.read.parquet(f"{d}/freq").schema
         # second file -> second run picks up the learned freq
         spark.createDataFrame(b2, "value string").coalesce(1).write.parquet(f"{d}/in/f2")
         q = (
@@ -474,6 +475,8 @@ def test_streaming_entropy_check_then_learn(spark):
         )
         q.awaitTermination(120)
         got = {r["value"]: r["critical_val"] for r in spark.read.parquet(f"{d}/alarms").collect()}
+        # the rewritten state keeps the types the first batch wrote
+        assert spark.read.parquet(f"{d}/freq").schema == first_schema
     # batch equivalent: learn on b1, score b2
     df1 = spark.createDataFrame(b1, "value string")
     df2 = spark.createDataFrame(b2, "value string")

@@ -42,6 +42,14 @@ def test_ranges_reference_json_golden(spark):
     back = ranges_from_reference_json(spark, payload)
     got = {r["id"]: (r["min"], r["max"]) for r in back.collect()}
     assert got == {"a": (2.5, 4.75), "b": (3.1, 6.3)}
+    assert back.schema.simpleString() == "struct<id:string,min:double,max:double>"
+    # integral bounds in the JSON still come back as doubles
+    whole = ranges_from_reference_json(
+        spark, json.dumps({"string:min": {"tuple:('c',)": 1}, "string:max": {"tuple:('c',)": 7}})
+    )
+    assert whole.schema == back.schema
+    (row,) = whole.collect()
+    assert row == ("c", 1.0, 7.0) and isinstance(row["min"], float)
 
 
 def test_known_values_reference_json(spark):
@@ -186,6 +194,12 @@ def test_chi_square_pairs(spark):
     assert out[("a", "b")]["dependent"] is True
     assert out[("a", "c")]["dependent"] is False
     assert out[("a", "b")]["chi2"] > out[("a", "c")]["chi2"]
+    # fewer than two columns: no pair, an empty frame of the declared schema
+    none = chi_square_pairs(df, ["a"])
+    assert none.collect() == []
+    assert none.schema.simpleString() == (
+        "struct<col_a:string,col_b:string,chi2:double,dof:bigint,z:double,dependent:boolean>"
+    )
 
 
 def test_mine_implication_rules_bucketed(spark):

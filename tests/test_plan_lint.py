@@ -18,9 +18,11 @@ this test fails and forces a review.
 from __future__ import annotations
 
 import re
+from pathlib import Path
 
 import pytest
 
+import logdata_anomaly_miner_spark
 from logdata_anomaly_miner_spark.engine_queries import QUERIES
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -179,6 +181,21 @@ def test_registered_plan_is_scale_shaped(spark, name):
     nb = nonscalar_bnlj(plan)
     if name not in BNLJ_ALLOW:
         assert not nb, f"{name}: non-scalar BroadcastNestedLoopJoin: {nb}"
+
+
+def test_driver_rows_enter_spark_only_through_from_driver():
+    """One path for driver rows into Spark: a row-list createDataFrame
+    pickles the rows and starts Python workers on every action, so the
+    library calls frames.from_driver (Arrow, typed by the schema) instead."""
+    pkg = Path(logdata_anomaly_miner_spark.__file__).parent
+    hits = [
+        f"{path.relative_to(pkg)}:{i}"
+        for path in sorted(pkg.rglob("*.py"))
+        if path.name != "frames.py"
+        for i, line in enumerate(path.read_text().splitlines(), start=1)
+        if "createDataFrame(" in line
+    ]
+    assert not hits, f"direct createDataFrame( outside frames.py: {hits}"
 
 
 def test_no_trivially_true_join_predicates(spark, capfd):
