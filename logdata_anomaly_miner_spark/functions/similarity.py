@@ -174,7 +174,9 @@ def _kmeans_lloyd(
     per iteration, no n×k×d temporaries."""
     import numpy as np
 
-    n = mat.shape[0]
+    n = len(mat)
+    if n == 0:
+        raise ValueError("empty training sample: k-means needs at least one vector")
     k = max(1, min(int(k), n))
     rng = np.random.RandomState(seed)
     centers = np.empty((k, mat.shape[1]), dtype=np.float64)
@@ -192,15 +194,16 @@ def _kmeans_lloyd(
         c2 = (centers * centers).sum(axis=1)
         dist = x2[:, None] - 2.0 * (mat @ centers.T) + c2[None, :]
         assign = dist.argmin(axis=1)
+        sizes = np.bincount(assign, minlength=k)
         new_centers = centers.copy()
-        for j in range(k):
-            members = mat[assign == j]
-            if len(members):
-                new_centers[j] = members.mean(axis=0)
-            else:
-                # empty cluster: reseed deterministically to the point
-                # farthest from its assigned center
-                new_centers[j] = mat[dist[np.arange(n), assign].argmax()]
+        for j in np.flatnonzero(sizes):
+            new_centers[j] = mat[assign == j].mean(axis=0)
+        empty = np.flatnonzero(sizes == 0)
+        if len(empty):
+            # empty clusters: reseed deterministically, each to a distinct
+            # point, farthest from its assigned center first
+            far = np.argsort(-dist[np.arange(n), assign], kind="stable")
+            new_centers[empty] = mat[far[: len(empty)]]
         shift = float(((new_centers - centers) ** 2).sum())
         centers = new_centers
         if shift <= tol:

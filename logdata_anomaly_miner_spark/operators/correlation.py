@@ -133,7 +133,8 @@ def chi_square_pairs(
         ).alias("chi2"),
         ((F.countDistinct("va") - 1) * (F.countDistinct("vb") - 1)).alias("dof"),
     )
-    k = F.col("dof").cast("double")
+    # dof 0 (one distinct value on a side): z is NULL, not a division error
+    k = F.nullif(F.col("dof").cast("double"), F.lit(0.0))
     z = (
         F.pow(F.col("chi2") / k, F.lit(1.0 / 3.0))
         - (F.lit(1.0) - F.lit(2.0) / (F.lit(9.0) * k))
@@ -243,11 +244,14 @@ def preselect_pairs(
     shape. The "first num_init per variable" prefix uses the same
     two-phase range-bucket pattern as timestamps._with_range_bucket (no
     whole-stream window): per-(var, bucket) counts reduce to a tiny
-    summary, the driver derives each bucket's carry-in (bounded
+    summary, each bucket's carry-in comes from it in-plan (bounded
     |vars|·|buckets| rows), buckets entirely past the cutoff are pruned,
     and row_number runs per (var, bucket) — so no task ever sorts a whole
     variable's stream."""
-    from logdata_anomaly_miner_spark.operators.timestamps import _with_range_bucket
+    from logdata_anomaly_miner_spark.operators.timestamps import (
+        _bucket_carry,
+        _with_range_bucket,
+    )
 
     for m in methods:
         if m not in ("excludeDueDistr", "matchDiscDistr", "matchDiscVals", "random"):
@@ -266,26 +270,14 @@ def preselect_pairs(
         .filter(F.col("_val").isNotNull())
     )
     d = _with_range_bucket(melted, order_cols, None)
-    bucket_counts = d.groupBy("_var", "_pid").agg(F.count(F.lit(1)).alias("_n")).collect()
     # carry-in per (var, bucket) = rows of that var in earlier buckets;
     # buckets whose carry already reaches num_init cannot contribute
-    per_var: dict[str, list[tuple[int, int]]] = {}
-    for r in bucket_counts:
-        per_var.setdefault(r["_var"], []).append((r["_pid"], r["_n"]))
-    carry_rows = []
-    for var, pcs in per_var.items():
-        acc = 0
-        for pid, n in sorted(pcs):
-            if acc < num_init:
-                carry_rows.append((var, pid, acc))
-            acc += n
-    carry_df = from_driver(
-        df.sparkSession, carry_rows, "_var string, _pid int, _carry long"
-    )
+    carry = F.coalesce(F.col("_carry"), F.lit(0))
     w = Window.partitionBy("_var", "_pid").orderBy(*[F.col(c) for c in order_cols])
     melted = (
-        d.join(F.broadcast(carry_df), ["_var", "_pid"])  # inner: prunes past-cutoff buckets
-        .withColumn("_rn", F.row_number().over(w) + F.col("_carry"))
+        _bucket_carry(d, F.count(F.lit(1)), "_carry", combine=F.sum, keys=["_var"])
+        .filter(carry < num_init)
+        .withColumn("_rn", F.row_number().over(w) + carry)
         .filter(F.col("_rn") <= num_init)
     )
     rows = (
@@ -374,7 +366,10 @@ def validate_correlation_pairs(
 
     Returns (pair, chunk, chi2, dof, z, n_new, failed, n_fails, n_tests,
     alarm, dropped)."""
-    from logdata_anomaly_miner_spark.operators.timestamps import _with_range_bucket
+    from logdata_anomaly_miner_spark.operators.timestamps import (
+        _bucket_carry,
+        _with_range_bucket,
+    )
     from logdata_anomaly_miner_spark.operators.var_gof import bt_min_successes
 
     # ``pairs`` restricts to a preselected candidate set (preselect_pairs,
@@ -415,20 +410,10 @@ def validate_correlation_pairs(
     )
     # carry counts come from the PRE-window frame: the per-bucket count
     # never needs the sort, so its recomputation branch skips it
-    cnts = bucketed.groupBy("pair", "_pid").agg(F.count(F.lit(1)).alias("_c"))
     d = bucketed.withColumn("_lrn", F.row_number().over(w_local))
-    carry = (
-        cnts.alias("a")
-        .join(
-            cnts.alias("b"),
-            (F.col("b.pair") == F.col("a.pair")) & (F.col("b._pid") < F.col("a._pid")),
-        )
-        .groupBy(F.col("a.pair").alias("pair"), F.col("a._pid").alias("_pid"))
-        .agg(F.sum("b._c").alias("_carry"))
-    )
-    d = d.join(F.broadcast(carry), ["pair", "_pid"], "left").withColumn(
-        "_ern", F.col("_lrn") + F.coalesce(F.col("_carry"), F.lit(0))
-    )
+    d = _bucket_carry(
+        d, F.count(F.lit(1)), "_carry", combine=F.sum, keys=["pair"], source=bucketed
+    ).withColumn("_ern", F.col("_lrn") + F.coalesce(F.col("_carry"), F.lit(0)))
 
     # ONE aggregation pass over the melted atoms produces the whole
     # (pair, chunk, combo) count cube — init rows land in chunk -1.

@@ -344,21 +344,17 @@ def empty_window_gaps(
     # within each range, and for each range's last row take the first w
     # of the nearest following non-empty range from the (tiny, broadcast)
     # per-range summary. No stage sees the whole window set.
-    from logdata_anomaly_miner_spark.operators.timestamps import _with_range_bucket
+    from logdata_anomaly_miner_spark.operators.timestamps import (
+        _bucket_carry,
+        _with_range_bucket,
+    )
 
     d = _with_range_bucket(wins, ["w"], None)
     d = d.withColumn(
         "_next_local", F.lead("w").over(Window.partitionBy("_pid").orderBy("w"))
     )
-    firsts = d.groupBy("_pid").agg(F.min("w").alias("_first_w"))
-    nxt = (
-        firsts.alias("a")
-        .join(firsts.alias("b"), F.col("b._pid") > F.col("a._pid"))
-        .groupBy(F.col("a._pid").alias("_pid"))
-        .agg(F.min_by(F.col("b._first_w"), F.col("b._pid")).alias("_carry_next"))
-    )
     return (
-        d.join(F.broadcast(nxt), "_pid", "left")
+        _bucket_carry(d, F.min("w"), "_carry_next", lead=True)
         .withColumn("next_w", F.coalesce("_next_local", "_carry_next"))
         .filter(F.col("next_w") > F.col("w") + 1)
         .select(

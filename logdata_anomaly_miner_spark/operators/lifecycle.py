@@ -30,7 +30,10 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from logdata_anomaly_miner_spark.operators.timestamps import _with_range_bucket
+from logdata_anomaly_miner_spark.operators.timestamps import (
+    _bucket_carry,
+    _with_range_bucket,
+)
 
 
 def screen_paths(
@@ -72,14 +75,7 @@ def learning_cutoff(
         d = _with_range_bucket(df.select(ts.alias("_ts")), ["_ts"], num_buckets)
         w = Window.partitionBy("_pid").orderBy("_ts")
         d = d.withColumn("_prev", F.lag("_ts").over(w))
-        last = d.groupBy("_pid").agg(F.max("_ts").alias("_last"))
-        carry = (
-            last.alias("a")
-            .join(last.alias("b"), F.col("b._pid") < F.col("a._pid"))
-            .groupBy(F.col("a._pid").alias("_pid"))
-            .agg(F.max("b._last").alias("_carry"))
-        )
-        d = d.join(F.broadcast(carry), "_pid", "left")
+        d = _bucket_carry(d, F.max("_ts"), "_carry", combine=F.max)
         prev = F.coalesce(F.col("_prev"), F.col("_carry"))
         cut = d.filter(prev.isNotNull() & (F.col("_ts") > prev + F.lit(delta))).agg(
             F.min("_ts").alias("cutoff_ts")

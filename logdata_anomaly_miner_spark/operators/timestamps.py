@@ -22,9 +22,9 @@ broadcast) summary table, and combine locally. The summary self-join is
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -90,13 +90,14 @@ def _with_range_bucket(
         # to one bucket — width_bucket gets null bounds, returns null,
         # coalesce lands every row in bucket 0, mirroring the quantile
         # path's degenerate collapse. Nulls sort first: null v -> bucket 0
-        # below every non-null bucket (width_bucket >= 1).
+        # below every non-null bucket (width_bucket >= 1). The coalesce
+        # goes inside least(), which skips nulls and would send them to nb.
         raw = F.width_bucket(
             v, F.col("_blo"), F.nullif(F.col("_bhi"), F.col("_blo")), F.lit(nb)
         )
         return (
             df.crossJoin(F.broadcast(mm))
-            .withColumn("_pid", F.coalesce(F.least(raw, F.lit(nb)), F.lit(0)))
+            .withColumn("_pid", F.least(F.coalesce(raw, F.lit(0)), F.lit(nb)))
             .drop("_blo", "_bhi")
         )
     if mode != "quantile":
@@ -124,25 +125,44 @@ def _with_range_bucket(
     )
 
 
-def _carry_join(
-    d: DataFrame, val_col: str, order_cols: Sequence[str], out_col: str
+def _bucket_carry(
+    d: DataFrame,
+    summary: Column,
+    out_col: str,
+    combine: Callable[[Column], Column] | None = None,
+    keys: Sequence[str] = (),
+    lead: bool = False,
+    source: DataFrame | None = None,
 ) -> DataFrame:
-    """Adds ``out_col`` = the last (in order) ``val_col`` of the nearest
-    preceding non-empty range bucket (null for the first). The per-range
-    summary is one max_by aggregate; the |ranges|² summary self-join is
-    negligible and the result broadcasts."""
-    last = d.groupBy("_pid").agg(
-        F.max_by(F.col(val_col), F.struct(*[F.col(c) for c in order_cols])).alias(
-            "_last_v"
-        )
+    """Adds ``out_col`` = the carry-in of each range bucket (per ``keys``)
+    for a two-phase prefix scan over ``_with_range_bucket`` ids.
+
+    ``summary`` is aggregated once per (keys…, _pid) over ``source``
+    (default ``d``). Each bucket then combines the summaries of every
+    earlier bucket — every later one with ``lead`` — with ``combine``
+    (e.g. ``F.max``, ``F.sum``), or, by default, takes the nearest such
+    bucket's summary. Null where no such bucket exists. The summary
+    self-join is |buckets|² rows per key and the result broadcasts back."""
+    s = (d if source is None else source).groupBy(*keys, "_pid").agg(
+        summary.alias("_sv")
     )
+    # b ranges over the buckets before a (after a, for a lead)
+    lo, hi = ("a", "b") if lead else ("b", "a")
+    cond = F.col(f"{lo}._pid") < F.col(f"{hi}._pid")
+    for k in keys:
+        cond = cond & (F.col(f"b.{k}") == F.col(f"a.{k}"))
+    if combine is None:
+        nearest = F.min_by if lead else F.max_by
+        agg = nearest(F.col("b._sv"), F.col("b._pid"))
+    else:
+        agg = combine(F.col("b._sv"))
     carry = (
-        last.alias("a")
-        .join(last.alias("b"), F.col("b._pid") < F.col("a._pid"))
-        .groupBy(F.col("a._pid").alias("_pid"))
-        .agg(F.max_by(F.col("b._last_v"), F.col("b._pid")).alias(out_col))
+        s.alias("a")
+        .join(s.alias("b"), cond)
+        .groupBy(*[F.col(f"a.{c}").alias(c) for c in (*keys, "_pid")])
+        .agg(agg.alias(out_col))
     )
-    return d.join(F.broadcast(carry), "_pid", "left")
+    return d.join(F.broadcast(carry), [*keys, "_pid"], "left")
 
 
 def unsorted_timestamps(
@@ -164,9 +184,10 @@ def unsorted_timestamps(
     # Global sequence: per-range lag; each range's first row compares against
     # the last timestamp (in order) of the nearest preceding non-empty range.
     d = _with_range_bucket(df, order_cols, num_buckets, mode=bucket_mode)
-    w = Window.partitionBy("_pid").orderBy(*[F.col(c) for c in order_cols])
+    order = [F.col(c) for c in order_cols]
+    w = Window.partitionBy("_pid").orderBy(*order)
     d = d.withColumn("_prev_local", F.lag(F.col(ts_col)).over(w))
-    d = _carry_join(d, ts_col, order_cols, "_carry")
+    d = _bucket_carry(d, F.max_by(F.col(ts_col), F.struct(*order)), "_carry")
     prev = F.coalesce(F.col("_prev_local"), F.col("_carry"))
     return (
         d.withColumn("prev_ts", prev)
@@ -202,14 +223,7 @@ def monotonic_adjust(
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     d = d.withColumn("_local", F.max(F.col(ts_col)).over(w))
-    pid_max = d.groupBy("_pid").agg(F.max(F.col(ts_col)).alias("_pmax"))
-    carry = (
-        pid_max.alias("a")
-        .join(pid_max.alias("b"), F.col("b._pid") < F.col("a._pid"))
-        .groupBy(F.col("a._pid").alias("_pid"))
-        .agg(F.max("b._pmax").alias("_carry"))
-    )
-    d = d.join(F.broadcast(carry), "_pid", "left")
+    d = _bucket_carry(d, F.max(F.col(ts_col)), "_carry", combine=F.max)
     return d.withColumn(
         out_col, F.greatest(F.col("_local"), F.col("_carry"))
     ).drop("_pid", "_local", "_carry")

@@ -85,8 +85,10 @@ def ks_statistic(
     )
     joined = stepped.join(counts, g) if g else stepped.crossJoin(F.broadcast(counts))
     return (
+        # a side with no rows in the group has no ECDF: its ks is NULL
         joined.withColumn(
-            "_d", F.abs(F.col("ca") / F.col("na") - F.col("cb") / F.col("nb"))
+            "_d",
+            F.abs(F.col("ca") / F.nullif("na", F.lit(0)) - F.col("cb") / F.nullif("nb", F.lit(0))),
         )
         .groupBy(*g)
         .agg(F.max("_d").alias("ks"))

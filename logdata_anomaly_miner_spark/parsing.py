@@ -393,13 +393,14 @@ def infer_years(
     functions. With NO stream column (one global sequence — the raw-ingest
     case that sees all the data), a naive ``Window.partitionBy()`` would
     funnel every row through one WindowExec partition; instead the same
-    two-phase range-bucket prefix scan as operators/timestamps.py:31-120
-    runs: range-partition on the order column, compute local lags/cumsums
-    per range, and derive each range's carry-in from a tiny broadcast
-    summary table. No carry CHAIN exists — straggler detection lags the
-    raw reading (data, not computed state) and wraparound lags the
-    straggler-corrected reading, which is fully determined once the raw
-    carry is joined — so three independent carry joins suffice.
+    two-phase range-bucket prefix scan as operators/timestamps.py runs:
+    range-partition on the order column (``_with_range_bucket``), compute
+    local lags/cumsums per range, and derive each range's carry-in from a
+    tiny broadcast summary table (``_bucket_carry``). No carry CHAIN
+    exists — straggler detection lags the raw reading (data, not computed
+    state) and wraparound lags the straggler-corrected reading, which is
+    fully determined once the raw carry is joined — so three independent
+    carry joins suffice.
     """
     from pyspark.sql import Window
 
@@ -416,13 +417,13 @@ def infer_years(
         prev_raw = F.lag("_s").over(w)
     else:
         from logdata_anomaly_miner_spark.operators.timestamps import (
-            _carry_join,
+            _bucket_carry,
             _with_range_bucket,
         )
 
         d = _with_range_bucket(d, order_cols, None)
         w = Window.partitionBy("_pid").orderBy(*order)
-        d = _carry_join(d, "_s", order_cols, "_carry_s")
+        d = _bucket_carry(d, F.max_by("_s", F.struct(*order)), "_carry_s")
         prev_raw = F.coalesce(F.lag("_s").over(w), F.col("_carry_s"))
     cum = w.rowsBetween(Window.unboundedPreceding, 0)
 
@@ -446,7 +447,7 @@ def infer_years(
     if stream_cols:
         prev_eff = F.lag("_eff").over(w)
     else:
-        d = _carry_join(d, "_eff", order_cols, "_carry_eff")
+        d = _bucket_carry(d, F.max_by("_eff", F.struct(*order)), "_carry_eff")
         prev_eff = F.coalesce(F.lag("_eff").over(w), F.col("_carry_eff"))
     wrap = (
         ~F.col("_strag")
@@ -460,14 +461,7 @@ def infer_years(
         extra = ()
     else:
         # distributed prefix sum: local cumsum + sum of earlier ranges
-        wsum = d.groupBy("_pid").agg(F.sum("_wrap").alias("_wsum"))
-        carry = (
-            wsum.alias("a")
-            .join(wsum.alias("b"), F.col("b._pid") < F.col("a._pid"))
-            .groupBy(F.col("a._pid").alias("_pid"))
-            .agg(F.sum("b._wsum").alias("_carry_w"))
-        )
-        d = d.join(F.broadcast(carry), "_pid", "left")
+        d = _bucket_carry(d, F.sum("_wrap"), "_carry_w", combine=F.sum)
         d = d.withColumn(
             "_yoff",
             F.sum("_wrap").over(cum) + F.coalesce(F.col("_carry_w"), F.lit(0)),

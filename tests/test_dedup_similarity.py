@@ -191,6 +191,28 @@ def test_ivf_topk_recall(spark):
     assert approx == exact
 
 
+def test_kmeans_lloyd_degenerate_samples():
+    """The IVF codebook fit names an empty training sample, and clusters
+    that empty in the same iteration reseed to distinct sample rows."""
+    from collections import Counter
+
+    import numpy as np
+
+    from logdata_anomaly_miner_spark.functions.similarity import _kmeans_lloyd
+
+    for empty in (np.zeros((0, 3)), np.array([])):
+        with pytest.raises(ValueError, match="empty training sample"):
+            _kmeans_lloyd(empty, 4, seed=1)
+    # 3 distinct values, k=5: two k-means++ seeds duplicate a center and
+    # both clusters come up empty in the first iteration
+    sample = [0.0, 3.0, 0.0, 3.0, 1.0]
+    mat = np.array([[v] for v in sample])
+    for seed in range(6):
+        centers = Counter(c[0] for c in _kmeans_lloyd(mat, 5, seed))
+        assert sum(centers.values()) == 5
+        assert not centers - Counter(sample), (seed, centers)
+
+
 def test_connected_components_vs_union_find(spark):
     """Alternating large-star/small-star components match a plain-Python
     union-find on a seeded random graph plus a long path (the path forces

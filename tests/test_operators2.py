@@ -224,6 +224,9 @@ def test_range_bucket_null_skew_and_stability(spark):
     # nulls in bucket 0
     nulls = b.filter(F.col("ts").isNull()).select("_pid").distinct().collect()
     assert [r["_pid"] for r in nulls] == [0]
+    bw = _with_range_bucket(df, ["ts"], 8, mode="width")
+    nulls = bw.filter(F.col("ts").isNull()).select("_pid").distinct().collect()
+    assert [r["_pid"] for r in nulls] == [0]
     # balanced despite the burst: no bucket holds more than ~2x its share
     assert max(sizes.values()) <= 2 * (1002 / 8) + 1
     # monotone: bucket ranges do not overlap

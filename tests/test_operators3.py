@@ -127,6 +127,11 @@ def test_ks_with_ties_and_groups(spark):
     # ECDFs evaluated after ties: at v=1: |2/3 - 1/2|=1/6; v=2: |1 - 1/2|=1/2; v=3: 0
     got = ks_statistic(a, b, "v", ["grp"]).collect()[0]
     assert got["grp"] == "g" and got["ks"] == pytest.approx(0.5)
+    # a group with no rows on one side has no statistic (NULL, not a
+    # division error)
+    a1 = spark.createDataFrame([("g", 1.0), ("h", 2.0)], "grp string, v double")
+    got = {r["grp"]: r["ks"] for r in ks_statistic(a1, b, "v", ["grp"]).collect()}
+    assert got == {"g": pytest.approx(0.5), "h": None}
 
 
 def test_chi_square(spark):
@@ -200,6 +205,10 @@ def test_chi_square_pairs(spark):
     assert none.schema.simpleString() == (
         "struct<col_a:string,col_b:string,chi2:double,dof:bigint,z:double,dependent:boolean>"
     )
+    # one row: every pair has dof 0, so z and the verdict are NULL
+    one = chi_square_pairs(df.limit(1), ["a", "b", "c"]).collect()
+    assert len(one) == 3
+    assert all(r["dof"] == 0 and r["z"] is None and r["dependent"] is None for r in one)
 
 
 def test_mine_implication_rules_bucketed(spark):

@@ -33,7 +33,7 @@ BNLJ_ALLOW = {
     # vocabularies are bounded by the parser model, not the data volume
     "hypothesis_rules": "type-pair vocabulary, |types|^2",
     "hypothesis_rules_back": "type-pair vocabulary, |types|^2",
-    # _carry_join per-range summary self-join — |range buckets|² rows
+    # _bucket_carry per-range summary self-join — |range buckets|² rows
     # (two-phase prefix scan, documented in operators/timestamps.py)
     "monotonic_adjust": "range-bucket summary self-join, |ranges|^2",
     # contingency completion: per-variable marginals cross — bounded by
@@ -196,6 +196,30 @@ def test_driver_rows_enter_spark_only_through_from_driver():
         if "createDataFrame(" in line
     ]
     assert not hits, f"direct createDataFrame( outside frames.py: {hits}"
+
+
+def test_bucket_carry_self_join_only_in_helper():
+    """One carry-in for every two-phase prefix scan: the range-bucket
+    summary self-join on ``_pid`` lives in timestamps._bucket_carry, and
+    every scan calls it instead of writing its own."""
+    import ast
+
+    pkg = Path(logdata_anomaly_miner_spark.__file__).parent
+    helper = pkg / "operators" / "timestamps.py"
+    fn = next(
+        n
+        for n in ast.parse(helper.read_text()).body
+        if isinstance(n, ast.FunctionDef) and n.name == "_bucket_carry"
+    )
+    pid_cmp = re.compile(r"""_pid["']\)\s*[<>]""")
+    hits = [
+        f"{path.relative_to(pkg)}:{i}"
+        for path in sorted(pkg.rglob("*.py"))
+        for i, line in enumerate(path.read_text().splitlines(), start=1)
+        if pid_cmp.search(line)
+        and not (path == helper and fn.lineno <= i <= fn.end_lineno)
+    ]
+    assert not hits, f"_pid summary self-join outside _bucket_carry: {hits}"
 
 
 def test_no_trivially_true_join_predicates(spark, capfd):

@@ -71,20 +71,35 @@ def test_value_range_sequential_matches_reference_loop(spark, events):
 @settings(max_examples=10, deadline=None)
 @given(
     st.lists(st.floats(min_value=-1000, max_value=1000, allow_nan=False), min_size=1, max_size=60),
-    st.integers(2, 9),
+    st.integers(1, 9),
+    st.sampled_from(["quantile", "width"]),
 )
-def test_global_prefix_scan_property(spark, ts_vals, nb):
+def test_global_prefix_scan_property(spark, ts_vals, nb, mode):
     """Distributed two-phase prefix max / lag == sequential fold, for any
-    sequence and any range-bucket count."""
+    sequence and any range-bucket count. The bucket carry-in's four forms
+    (last value before, first value after, max before, per-key count
+    before) completed by a local window == the same folds, over an order
+    column with ties and nulls."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
     from logdata_anomaly_miner_spark.operators.timestamps import (
+        _bucket_carry,
+        _with_range_bucket,
         monotonic_adjust,
         unsorted_timestamps,
     )
 
     rows = [(i, float(t)) for i, t in enumerate(ts_vals)]
     df = spark.createDataFrame(rows, "event_id long, ts double").repartition(5)
-    adj = {r["event_id"]: r["ts_adj"] for r in monotonic_adjust(df, num_buckets=nb).collect()}
-    bad = sorted(r["event_id"] for r in unsorted_timestamps(df, num_buckets=nb).collect())
+    adj = {
+        r["event_id"]: r["ts_adj"]
+        for r in monotonic_adjust(df, num_buckets=nb, bucket_mode=mode).collect()
+    }
+    bad = sorted(
+        r["event_id"]
+        for r in unsorted_timestamps(df, num_buckets=nb, bucket_mode=mode).collect()
+    )
     run, prev, want_adj, want_bad = float("-inf"), None, {}, []
     for i, t in enumerate(ts_vals):
         run = max(run, t)
@@ -93,6 +108,46 @@ def test_global_prefix_scan_property(spark, ts_vals, nb):
             want_bad.append(i)
         prev = t
     assert adj == want_adj and bad == want_bad
+
+    # order o: ties (t // 100) and nulls (every 7th row); i breaks ties
+    seq = [
+        (None if i % 7 == 3 else int(t // 100), i, i % 3, float(t))
+        for i, t in enumerate(ts_vals)
+    ]
+    sdf = spark.createDataFrame(seq, "o long, i long, k long, v double").repartition(5)
+    order = [F.col("o"), F.col("i")]
+    d = _with_range_bucket(sdf, ["o"], nb, mode=mode)
+    d = _bucket_carry(d, F.max_by("v", F.struct(*order)), "last_before")
+    d = _bucket_carry(d, F.min_by("v", F.struct(*order)), "first_after", lead=True)
+    d = _bucket_carry(d, F.max("v"), "max_before", combine=F.max)
+    d = _bucket_carry(d, F.count(F.lit(1)), "cnt_before", combine=F.sum, keys=["k"])
+    w = Window.partitionBy("_pid").orderBy(*order)
+    wk = Window.partitionBy("k", "_pid").orderBy(*order)
+    got = {
+        r["i"]: tuple(r)[1:]
+        for r in d.select(
+            "i",
+            F.coalesce(F.lag("v").over(w), "last_before"),
+            F.coalesce(F.lead("v").over(w), "first_after"),
+            F.greatest(
+                F.max("v").over(w.rowsBetween(Window.unboundedPreceding, 0)),
+                "max_before",
+            ),
+            F.row_number().over(wk) + F.coalesce("cnt_before", F.lit(0)),
+        ).collect()
+    }
+    fold = sorted(seq, key=lambda r: (r[0] is not None, r[0] or 0, r[1]))
+    want, run, seen = {}, float("-inf"), {}
+    for j, (_, i, k, v) in enumerate(fold):
+        run = max(run, v)
+        seen[k] = seen.get(k, 0) + 1
+        want[i] = (
+            fold[j - 1][3] if j else None,
+            fold[j + 1][3] if j + 1 < len(fold) else None,
+            run,
+            seen[k],
+        )
+    assert got == want
 
 
 @settings(max_examples=10, deadline=None)
